@@ -362,7 +362,7 @@ object Dedup {
     // the old form paid is a per-partition hash set
     var labels = edgesByDst.mapPartitions({ it =>
       val seen = new java.util.HashSet[Long]()
-      it.collect { case (dst, _) if seen.add(dst) => (dst, dst) }
+      it.filter { case (dst, _) => seen.add(dst) }.map { case (dst, _) => (dst, dst) }
     }, preservesPartitioning = true).cache()
     var labelsCheckpointed = false // never unpersist a checkpointed generation
     var iter = 0
@@ -690,39 +690,42 @@ object Dedup {
     * intersection COUNTS them — so appends must be disjoint batches
     * (the natural ingest contract: append exactly the batch just
     * screened and kept); an accidental double-append is repaired by
-    * [[compactNearDupIndex]].
+    * [[compactNearDupIndex]]. Commits, swaps, tombstones and markers
+    * follow [[StoreLifecycle]].
     */
   def writeNearDupIndex(existing: DataFrame, indexDir: String, n: Int = 3,
       maxShingleDf: Int = Int.MaxValue): Unit = {
     val spark = existing.sparkSession
-    // `hashes` shares nothing with the shingle chain, so the two commit
-    // chains overlap from a driver pool (guide §2.6): tiny index writes
-    // are dominated by per-job scheduling + commit latency, and the
-    // hashes job's tasks back-fill the shingle chain's tails
-    graft.tools.DriverPool.awaitAll(Seq(
-      () => {
-        val shRaw = graft.tools.InternalCaches.persist(hashedShingleSet(existing, n))
-        val hot =
-          if (maxShingleDf == Int.MaxValue) shRaw.select("sh").limit(0)
-          else hotShingles(shRaw, maxShingleDf)
-        hot.write.mode("overwrite").parquet(s"$indexDir/hot")
-        val hotStored = spark.read.parquet(s"$indexDir/hot")
-        shRaw.join(broadcast(hotStored), Seq("sh"), "left_anti")
-          .write.mode("overwrite").parquet(s"$indexDir/shingles")
-        // sizes from the WRITTEN files — self-consistent with the stored
-        // capped set by construction, and the read-back is cheaper than
-        // re-deriving the shingle pipeline
-        spark.read.parquet(s"$indexDir/shingles")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
-          .write.mode("overwrite").parquet(s"$indexDir/sizes")
-      },
-      // hashes carry doc_id PROVENANCE (the exact gate itself probes the
-      // distinct h projection): a takedown of one document must not
-      // un-gate another live document with identical text, which a bare
-      // distinct-hash set cannot express — see deleteFromNearDupIndex
-      () => existing.select(col("doc_id"), md5(col("text")).as("h")).distinct()
-        .write.mode("overwrite").parquet(s"$indexDir/hashes")))
-    IndexFs.writeSmall(spark, s"$indexDir/_format", NearDupFormat)
+    NearDup.build(spark, indexDir) {
+      // `hashes` shares nothing with the shingle chain, so the two commit
+      // chains overlap from a driver pool: tiny index writes
+      // are dominated by per-job scheduling + commit latency, and the
+      // hashes job's tasks back-fill the shingle chain's tails
+      graft.tools.DriverPool.awaitAll(Seq(
+        () => {
+          val shRaw = graft.tools.InternalCaches.persist(hashedShingleSet(existing, n))
+          val hot =
+            if (maxShingleDf == Int.MaxValue) shRaw.select("sh").limit(0)
+            else hotShingles(shRaw, maxShingleDf)
+          hot.write.mode("overwrite").parquet(s"$indexDir/hot")
+          val hotStored = spark.read.parquet(s"$indexDir/hot")
+          shRaw.join(broadcast(hotStored), Seq("sh"), "left_anti")
+            .write.mode("overwrite").parquet(s"$indexDir/shingles")
+          // sizes from the WRITTEN files — self-consistent with the stored
+          // capped set by construction, and the read-back is cheaper than
+          // re-deriving the shingle pipeline
+          spark.read.parquet(s"$indexDir/shingles")
+            .groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
+            .write.mode("overwrite").parquet(s"$indexDir/sizes")
+        },
+        // hashes carry doc_id PROVENANCE (the exact gate itself probes the
+        // distinct h projection): a takedown of one document must not
+        // un-gate another live document with identical text, which a bare
+        // distinct-hash set cannot express — see deleteFromNearDupIndex
+        () => existing.select(col("doc_id"), md5(col("text")).as("h")).distinct()
+          .write.mode("overwrite").parquet(s"$indexDir/hashes")))
+      IndexFs.writeSmall(spark, s"$indexDir/_format", NearDupFormat)
+    }
   }
 
   /** On-disk format version of the near-dup index. "2" = the hashes
@@ -747,6 +750,12 @@ object Dedup {
           "schemas in one table and silently break takedown suppression " +
           "— run rebuildNearDupIndex over the live corpus to migrate")
 
+  /** The near-dup store's [[StoreLifecycle]]: three tables that grow in
+    * lockstep and compact one by one, doc_id tombstones, the frozen hot
+    * list, and the format gate on every entry but the rebuild. */
+  private val NearDup = StoreLifecycle(Seq("shingles", "sizes", "hashes"),
+    Some("doc_id"), Seq("hot"), requireNearDupFormat)
+
   /** Append a (disjoint) kept batch into the stored near-dup index:
     * batch shingles capped by the STORED hot list, batch sizes, batch
     * hashes — all as additional files. Cost = one batch scan +
@@ -765,27 +774,24 @@ object Dedup {
   def appendNearDupIndex(batch: DataFrame, indexDir: String, n: Int = 3,
       maxFilesPerTable: Int = 64): Unit = {
     val spark = batch.sparkSession
-    // heal a crashed compaction swap BEFORE appending: mode("append")
-    // into a missing live table would mint a batch-only table and fork
-    // the index away from the orphaned .compact copy
-    recoverNearDupSwap(spark, indexDir)
-    requireNearDupFormat(spark, indexDir)
-    val hot = spark.read.parquet(s"$indexDir/hot")
-    val capped = graft.tools.InternalCaches.persist(
-      hashedShingleSet(batch, n).join(broadcast(hot), Seq("sh"), "left_anti"))
-    // the hashes append shares nothing with the shingle chain — overlap
-    // the two commit chains (guide §2.6; per-append these are three
-    // tiny jobs whose cost is scheduling + commit latency). sizes stays
-    // AFTER shingles inside its chain: the shingles write materializes
-    // the registry-persisted `capped`, which sizes then reads from cache.
-    graft.tools.DriverPool.awaitAll(Seq(
-      () => {
-        capped.repartition(1).write.mode("append").parquet(s"$indexDir/shingles")
-        capped.groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
-          .repartition(1).write.mode("append").parquet(s"$indexDir/sizes")
-      },
-      () => batch.select(col("doc_id"), md5(col("text")).as("h")).distinct()
-        .repartition(1).write.mode("append").parquet(s"$indexDir/hashes")))
+    NearDup.append(spark, indexDir) {
+      val hot = spark.read.parquet(s"$indexDir/hot")
+      val capped = graft.tools.InternalCaches.persist(
+        hashedShingleSet(batch, n).join(broadcast(hot), Seq("sh"), "left_anti"))
+      // the hashes append shares nothing with the shingle chain — overlap
+      // the two commit chains (per-append these are three
+      // tiny jobs whose cost is scheduling + commit latency). sizes stays
+      // AFTER shingles inside its chain: the shingles write materializes
+      // the registry-persisted `capped`, which sizes then reads from cache.
+      graft.tools.DriverPool.awaitAll(Seq(
+        () => {
+          capped.repartition(1).write.mode("append").parquet(s"$indexDir/shingles")
+          capped.groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
+            .repartition(1).write.mode("append").parquet(s"$indexDir/sizes")
+        },
+        () => batch.select(col("doc_id"), md5(col("text")).as("h")).distinct()
+          .repartition(1).write.mode("append").parquet(s"$indexDir/hashes")))
+    }
     if (maxFilesPerTable > 0 &&
         countDataFiles(spark, s"$indexDir/shingles") > maxFilesPerTable.toLong)
       compactNearDupIndex(spark, indexDir)
@@ -794,97 +800,37 @@ object Dedup {
   /** [[appendNearDupIndex]] under an at-least-once delivery contract
     * (the x114 streaming gate): near-dup appends are NOT replay-safe —
     * duplicated shingle rows inflate intersection counts (the x104
-    * nuance) — so each append commits a per-batch marker
-    * (`_batch_commits/b<id>`) and a redelivered batch whose marker
-    * exists is skipped outright. The marker writes AFTER the data (a
-    * crash between them makes the redelivery double-append — the
-    * over-approximation [[compactNearDupIndex]]'s distinct-rewrite
-    * repairs, spec-gated), never before (marker-first would LOSE the
-    * batch). Marker I/O goes through [[IndexFs]] (the Hadoop API), so
-    * the exactly-once contract holds on whatever filesystem `indexDir`
-    * names — hdfs/s3a index dirs included, not just local disk.
-    * Returns whether the append ran.
+    * nuance) — so each append commits a per-batch marker and a
+    * redelivered batch whose marker exists is skipped outright
+    * ([[StoreLifecycle.appendOnce]]: marker after data; the crash window
+    * between them double-appends, which [[compactNearDupIndex]]'s
+    * distinct-rewrite repairs). Returns whether the append ran.
     */
   def appendNearDupIndexOnce(batch: DataFrame, indexDir: String,
-      batchId: Long, n: Int = 3, maxFilesPerTable: Int = 64): Boolean = {
-    val spark = batch.sparkSession
-    // heal a crashed whole-index rebuild swap BEFORE the marker probe:
-    // the markers live inside the swapped directory
-    IndexFs.recoverSwap(spark, indexDir)
-    val marker = s"$indexDir/_batch_commits/b$batchId"
-    if (IndexFs.exists(spark, marker)) false
-    else {
-      appendNearDupIndex(batch, indexDir, n, maxFilesPerTable)
-      IndexFs.touch(spark, marker)
-      true
-    }
-  }
-
-  /** A stored near-dup table with takedown tombstones applied — the
-    * per-doc_id anti-join every index reader routes through
-    * (merge-on-read, the [[graft.ext.Similarity]] `liveVectors`
-    * discipline at the document grain). The tombstone table is
-    * takedown-request-sized and broadcasts; physical removal is
-    * deferred to [[compactNearDupIndex]] (applies and clears) or
-    * [[rebuildNearDupIndex]] (whole-directory swap — the swapped-in
-    * index starts with no tombstones).
-    */
-  private def ndLive(table: DataFrame, spark: SparkSession,
-      indexDir: String): DataFrame = {
-    val del = s"$indexDir/deletes"
-    if (IndexFs.exists(spark, del))
-      table.join(broadcast(spark.read.parquet(del).distinct()),
-        Seq("doc_id"), "left_anti")
-    else table
-  }
+      batchId: Long, n: Int = 3, maxFilesPerTable: Int = 64): Boolean =
+    NearDup.appendOnce(batch.sparkSession, indexDir, batchId)(
+      appendNearDupIndex(batch, indexDir, n, maxFilesPerTable))
 
   /** Takedown at the document grain — the right-to-be-forgotten verb
     * for the stored near-dup index: doc_ids land as TOMBSTONES
-    * (`deletes/`, one tiny file per request) that every reader
-    * anti-joins out of `hashes`/`shingles`/`sizes`, so the delete is
-    * effective at the next screen for O(|request|) I/O — never an
-    * index-sized rewrite on the takedown path. The exact gate stays
-    * correct for OTHER copies of the same text because `hashes`
+    * ([[StoreLifecycle.tombstone]], one tiny file per request) that
+    * every reader anti-joins out of `hashes`/`shingles`/`sizes`, so the
+    * delete is effective at the next screen for O(|request|) I/O —
+    * never an index-sized rewrite on the takedown path. The exact gate
+    * stays correct for OTHER copies of the same text because `hashes`
     * stores (doc_id, h) provenance: only the deleted document's hash
     * row is suppressed, and the distinct-h probe set still carries
     * the hash while any live document has it. Set semantics make the
     * write replay-safe without markers. The frozen hot list is NOT
     * revisited (it is a cap, not content — a takedown that shifts
-    * boilerplate frequencies is [[rebuildNearDupIndex]]'s case).
+    * boilerplate frequencies is [[rebuildNearDupIndex]]'s case), so
+    * the screen's memoized batch-side frame, keyed on it, stays warm.
     * Re-admission contract: tombstones win over appends until a
     * compaction clears the applied set (the semantic-index rule;
     * spec-pinned in TakedownSpec).
     */
-  def deleteFromNearDupIndex(docIds: DataFrame, indexDir: String): Unit = {
-    val spark = docIds.sparkSession
-    recoverNearDupSwap(spark, indexDir)
-    requireNearDupFormat(spark, indexDir)
-    docIds.select(col("doc_id")).filter(col("doc_id").isNotNull).distinct()
-      .repartition(1).write.mode("append").parquet(s"$indexDir/deletes")
-    // a frame memoized over the OLD tombstone set would keep matching
-    // against the deleted documents — the rebuild staleness class. The
-    // release is scoped to the tombstone dir (round 19 — was the whole
-    // indexDir): a takedown changes no stored artifact except
-    // `deletes/` (hot/hashes/shingles/sizes files are immutable until
-    // a compaction, which releases its swapped tables itself), and
-    // the screen's memoized batch-side frame reads only the
-    // frozen hot list — the whole-prefix release forced every
-    // subsequent screen of the same probe to re-shingle it.
-    graft.tools.InternalCaches.releaseByPath(spark, s"$indexDir/deletes")
-  }
-
-  /** Heal any crashed tmp → old → live swap on the near-dup index —
-    * the whole-directory rebuild swap first ([[rebuildNearDupIndex]]),
-    * then the three per-table compaction swaps
-    * ([[IndexFs.recoverSwap]]); called at the top of every
-    * read/append/compact entry so "crash anywhere, re-run to finish"
-    * is true of the whole lifecycle, not just the compactor.
-    */
-  private def recoverNearDupSwap(spark: SparkSession, indexDir: String): Unit = {
-    IndexFs.recoverSwap(spark, indexDir)
-    Seq("shingles", "sizes", "hashes")
-      .foreach(t => IndexFs.recoverSwap(spark, s"$indexDir/$t"))
-  }
+  def deleteFromNearDupIndex(docIds: DataFrame, indexDir: String): Unit =
+    NearDup.tombstone(docIds.sparkSession, indexDir, docIds)
 
   /** Retrain-and-migrate for the near-dup index's FROZEN hot-shingle
     * list — the x116 discipline at the document grain: the hot list is
@@ -896,94 +842,52 @@ object Dedup {
     * the dropped-hot rows and the raw text are gone), so the caller
     * hands back the document set, re-learns the hot list over all of
     * it, re-caps every shingle set under the new list, and swaps the
-    * WHOLE index directory as one unit (hot and shingles must change
-    * together: a screen capping the incoming batch under one list
-    * against stored shingles capped under another would systematically
-    * under-count intersections). `_batch_commits` markers move into
-    * the new directory before the swap so post-rebuild redeliveries
-    * still skip; the memoized screens reading the old directory are
-    * invalidated ([[graft.tools.InternalCaches.releaseByPath]] — the
-    * x116 stale-geometry lesson). Cost = the build's (one corpus
-    * shingle pass + the df aggregate), paid only when boilerplate
-    * drift warrants a fresh cap.
+    * WHOLE index directory as one unit ([[StoreLifecycle.rebuild]]: hot
+    * and shingles must change together — a screen capping the incoming
+    * batch under one list against stored shingles capped under another
+    * would systematically under-count intersections). Takedowns stay
+    * durable even if the caller hands back a corpus that still contains
+    * the tombstoned documents: the live tombstone set filters the
+    * retrain input. Cost = the build's (one corpus shingle pass + the
+    * df aggregate), paid only when boilerplate drift warrants a fresh
+    * cap.
     */
   def rebuildNearDupIndex(corpus: DataFrame, indexDir: String, n: Int = 3,
       maxShingleDf: Int = Int.MaxValue): Unit = {
     val spark = corpus.sparkSession
-    recoverNearDupSwap(spark, indexDir)
-    val tmp = s"$indexDir.compact"
-    // a PRIOR rebuild may have crashed after moving the live markers
-    // into tmp but before the swap — tmp then holds the ONLY copy, and
-    // the wholesale delete below would degrade every committed batch
-    // to at-least-once (double-appended intersection counts until the
-    // next compaction). Rescue them back into the live directory first
-    // (the round-14 advisory: the two rebuild lifecycles' recovery
-    // guarantees must be symmetric).
-    IndexFs.mergeMarkers(spark, s"$tmp/_batch_commits",
-      s"$indexDir/_batch_commits")
-    IndexFs.fs(spark, tmp).delete(new org.apache.hadoop.fs.Path(tmp), true)
-    // takedowns stay durable across a rebuild even if the caller hands
-    // back a corpus that still contains the tombstoned documents: the
-    // live tombstone set filters the retrain input, and the swapped-in
-    // directory starts clean (deletes/ stays behind in .old)
-    writeNearDupIndex(ndLive(corpus, spark, indexDir), tmp, n, maxShingleDf)
-    // per-file move with asserted renames, not a directory rename: see
-    // [[IndexFs.mergeMarkers]] for the two silent-degrade shapes a bare
-    // rename has here
-    IndexFs.mergeMarkers(spark, s"$indexDir/_batch_commits",
-      s"$tmp/_batch_commits")
-    IndexFs.swapCompact(spark, indexDir)
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    NearDup.rebuild(spark, indexDir)(staged => writeNearDupIndex(
+      NearDup.live(spark, indexDir, corpus), staged, n, maxShingleDf))
   }
 
   /** Offline maintenance for the near-dup index: distinct-rewrite
     * `shingles` and `hashes` (repairing any accidental double-append —
     * the duplicates that would inflate intersection counts), recompute
-    * `sizes` from the compacted set, then swap each table tmp → old →
-    * live ([[IndexFs.swapCompact]]). Every step leaves a complete copy
-    * of each table on disk; the one step with no LIVE directory (between
-    * the two renames) is detected and completed by
-    * [[IndexFs.recoverSwap]], which every lifecycle entry point runs
-    * first — so a crash at any point is healed by the next read, append,
-    * or compaction re-run. The hot list is left as built — refreshing it
-    * is a REBUILD (it changes which shingles the whole index stores),
-    * not a compaction.
+    * `sizes` from the compacted set, then swap each table and clear the
+    * applied tombstones ([[StoreLifecycle.rewrite]] — a crash at any
+    * point is healed by the next read, append, or compaction re-run).
+    * The hot list is left as built — refreshing it is a REBUILD (it
+    * changes which shingles the whole index stores), not a compaction.
     */
-  def compactNearDupIndex(spark: SparkSession, indexDir: String): Unit = {
-    recoverNearDupSwap(spark, indexDir)
-    requireNearDupFormat(spark, indexDir)
-    def swap(table: String): Unit =
-      IndexFs.swapCompact(spark, s"$indexDir/$table")
-    // local persist, not the memoized registry: the frame reads the very
-    // directory the swap replaces (the compactGramIndex argument).
-    // Takedown tombstones apply DURABLY here (ndLive anti-joins them
-    // out of every rewrite) and clear only after the LAST table swap:
-    // a crash between leaves tombstones anti-joining already-absent
-    // doc_ids — a no-op, never a resurrected document.
-    // the hashes rewrite shares nothing with the shingle chain — the
-    // two rewrite chains overlap from a driver pool (guide §2.6);
-    // every swap still happens strictly AFTER both chains complete
-    val sh = ndLive(spark.read.parquet(s"$indexDir/shingles"), spark, indexDir)
-      .distinct().persist()
-    graft.tools.DriverPool.awaitAll(Seq(
-      () => {
-        sh.write.mode("overwrite").parquet(s"$indexDir/shingles.compact")
-        sh.groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
-          .write.mode("overwrite").parquet(s"$indexDir/sizes.compact")
-        sh.unpersist(blocking = false)
-      },
-      () => ndLive(spark.read.parquet(s"$indexDir/hashes"), spark, indexDir)
-        .distinct()
-        .write.mode("overwrite").parquet(s"$indexDir/hashes.compact")))
-    swap("shingles"); swap("sizes"); swap("hashes")
-    IndexFs.delete(spark, s"$indexDir/deletes")
-    // the swaps replaced the three tables' files and cleared the
-    // tombstones — drop any memoized frame reading them (scoped: the
-    // frozen hot list is untouched, so batch-side shingle caps keyed
-    // on it stay warm)
-    Seq("shingles", "sizes", "hashes", "deletes").foreach(t =>
-      graft.tools.InternalCaches.releaseByPath(spark, s"$indexDir/$t"))
-  }
+  def compactNearDupIndex(spark: SparkSession, indexDir: String): Unit =
+    NearDup.rewrite(spark, indexDir) { staged =>
+      // local persist, not the memoized registry: the frame reads the
+      // very directory the swap replaces (the compactGramIndex argument).
+      // The hashes rewrite shares nothing with the shingle chain — the
+      // two rewrite chains overlap from a driver pool;
+      // every swap still happens strictly AFTER both chains complete
+      val sh = NearDup.live(spark, indexDir, spark.read.parquet(s"$indexDir/shingles"))
+        .distinct().persist()
+      graft.tools.DriverPool.awaitAll(Seq(
+        () => {
+          sh.write.mode("overwrite").parquet(staged("shingles"))
+          sh.groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
+            .write.mode("overwrite").parquet(staged("sizes"))
+          sh.unpersist(blocking = false)
+        },
+        () => NearDup.live(spark, indexDir, spark.read.parquet(s"$indexDir/hashes"))
+          .distinct()
+          .write.mode("overwrite").parquet(staged("hashes"))))
+    }
 
   /** x104 screen half — [[incrementalScreen]] semantics (same output
     * contract, same verdict rules) reading ONLY the stored artifacts:
@@ -999,15 +903,15 @@ object Dedup {
     val spark = incoming.sparkSession
     // a reader after a mid-swap compactor crash self-heals (one rename)
     // instead of failing on the missing live table
-    recoverNearDupSwap(spark, indexDir)
-    requireNearDupFormat(spark, indexDir)
+    NearDup.enter(spark, indexDir)
+    def stored(t: String) = NearDup.live(spark, indexDir, spark.read.parquet(s"$indexDir/$t"))
     // tombstones out first, then project to the distinct-h probe set:
     // the projection both defends the exact gate against duplicate
     // hash rows from appends (a duplicate would duplicate incoming
     // rows through the left join) and keeps a hash alive while ANY
     // live document carries it — deleting one of two identical docs
     // must not un-gate the other
-    val exHash = ndLive(spark.read.parquet(s"$indexDir/hashes"), spark, indexDir)
+    val exHash = stored("hashes")
       .select(col("h")).distinct()
       .withColumn("ex", lit(true))
     val exactFlag = incoming.select(col("doc_id"), md5(col("text")).as("h"))
@@ -1016,10 +920,8 @@ object Dedup {
     val hot = spark.read.parquet(s"$indexDir/hot")
     val inSh = graft.tools.InternalCaches.persist(
       hashedShingleSet(incoming, n).join(broadcast(hot), Seq("sh"), "left_anti"))
-    val exSh = ndLive(spark.read.parquet(s"$indexDir/shingles"), spark, indexDir)
-    val exSizes = ndLive(spark.read.parquet(s"$indexDir/sizes"), spark, indexDir)
-      .withColumnRenamed("doc_id", "ex_doc")
-    screenVerdict(exactFlag, inSh, exSh, exSizes, minJaccard)
+    val exSizes = stored("sizes").withColumnRenamed("doc_id", "ex_doc")
+    screenVerdict(exactFlag, inSh, stored("shingles"), exSizes, minJaccard)
   }
 
   /** Cross-source overlap matrix — the provenance audit that tells a
@@ -1532,9 +1434,9 @@ object Dedup {
   }
 
   /** Build the bucket-partitioned gram index + Bloom sidecar at corpus
-    * ingest. `expectedItems` sizes the Bloom (default: the measured
-    * distinct-gram count — one aggregate over the frame the write
-    * materializes anyway); appends past the sizing only raise fpp
+    * ingest. The measured distinct-gram count sizes the Bloom (one
+    * aggregate that also materializes the cached gram set both pooled
+    * jobs below read); appends past the sizing only raise fpp
     * (weaker pruning, still-exact output) until [[compactGramIndex]]
     * re-sizes. `buckets` fixes the partitioning scheme until the next
     * [[compactGramIndex]] re-derives it (recorded in the sidecar, which
@@ -1545,14 +1447,13 @@ object Dedup {
     * for callers who know their append cadence.
     */
   def writeGramIndexBucketed(docs: DataFrame, indexDir: String, k: Int = 8,
-      buckets: Int = 0, expectedItems: Option[Long] = None,
-      fpp: Double = 0.01): Unit = {
+      buckets: Int = 0, fpp: Double = 0.01): Unit = {
     require(buckets >= 0, s"buckets must be positive (0 = auto), got $buckets")
     require(fpp > 0 && fpp < 1, s"fpp in (0,1), got $fpp")
     val spark = docs.sparkSession
     val g = graft.tools.InternalCaches.persist(
       gramStream(docs, k).select("g").distinct())
-    val items = math.max(expectedItems.getOrElse(g.count()), 64L)
+    val items = math.max(g.count(), 64L)
     val nBuckets = if (buckets > 0) buckets else autoBucketCount(items)
     val numBits = BloomFilter.optimalNumOfBits(items, fpp)
     // the Bloom build and the bucketed write both read the cached gram

@@ -3,12 +3,13 @@ package graft.ext
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Filesystem plumbing shared by the stored-index lifecycles (gram,
-  * near-dup, LM, semantic): commit markers and the tmp → old → live
-  * compaction swap, all through the Hadoop [[FileSystem]] API so the
-  * same code runs against `file:`, `hdfs:`, or `s3a:` index
-  * directories. The round-13 `*Once` appends proved their exactly-once
-  * semantics with `java.io.File` markers — correct on a laptop, and
+/** Filesystem plumbing shared by the stored-index lifecycles
+  * ([[StoreLifecycle]], the gram index, the session store): markers,
+  * small control files and the checked tmp → old → live swap, all
+  * through the Hadoop [[FileSystem]] API so the same code runs against
+  * `file:`, `hdfs:`, or `s3a:` index directories. The round-13 `*Once`
+  * appends proved their exactly-once semantics with `java.io.File`
+  * markers — correct on a laptop, and
   * silently broken the moment `indexDir` is an HDFS/S3 URI (the marker
   * lands on one node's local disk, `exists()` is always false, and
   * every redelivered batch double-appends). This object is the fix:
@@ -133,42 +134,6 @@ object IndexFs {
     finally out.close()
   }
 
-  /** Merge the zero-byte batch markers under `fromDir` into `toDir`,
-    * file by file, then drop the emptied `fromDir`. A marker already
-    * present on both sides collapses to one (its content is its
-    * existence); any other rename must succeed or the caller's
-    * exactly-once bookkeeping is silently losing markers, so failure
-    * throws instead of proceeding. No-op when `fromDir` is absent.
-    *
-    * This is the rebuild lifecycles' marker transport in BOTH
-    * directions. Forward (live → `.compact`) it replaces a bare
-    * directory rename, whose two failure shapes each degrade committed
-    * batches to at-least-once: a stale `.compact/_batch_commits` left
-    * by a crashed earlier rebuild makes Hadoop `rename` silently
-    * return false (dest exists), and the swap then promotes the STALE
-    * marker set over the newer live one. Backward
-    * (`.compact` → live, at rebuild entry) it rescues the markers a
-    * crashed prior rebuild moved into the tmp directory before the
-    * re-run destroys or overwrites it — without the rescue, every
-    * batch committed before the crash redelivers as a double-append.
-    */
-  def mergeMarkers(spark: SparkSession, fromDir: String, toDir: String): Unit = {
-    val f = fs(spark, fromDir)
-    val from = new Path(fromDir)
-    if (f.exists(from)) {
-      val to = new Path(toDir)
-      f.mkdirs(to)
-      f.listStatus(from).foreach { st =>
-        val dst = new Path(to, st.getPath.getName)
-        if (f.exists(dst)) f.delete(st.getPath, false)
-        else if (!f.rename(st.getPath, dst))
-          throw new IllegalStateException(
-            s"marker move failed: ${st.getPath} -> $dst")
-      }
-      f.delete(from, true)
-    }
-  }
-
   /** Recursive COPY of a small control-plane directory; no-op when the
     * source is absent. Copy, not move, is the crash-safe transport for
     * state that must survive a tmp → old → live swap (the gram index's
@@ -194,16 +159,33 @@ object IndexFs {
     * [[recoverSwap]] repairs, so "crash anywhere, re-run (or just read)
     * to finish" is the real guarantee. Callers must have finished
     * writing `liveDir.compact` before calling.
+    *
+    * Checked: a missing `.compact` throws BEFORE the demote, and both
+    * renames throw on failure. Unchecked, a swap with nothing staged
+    * demoted live to `.old` and then failed the promote (the local
+    * filesystem throws, HDFS returns false) — leaving the table only in
+    * `.old`, a state [[recoverSwap]] cannot see and the next swap's
+    * opening delete destroys.
     */
   def swapCompact(spark: SparkSession, liveDir: String): Unit = {
-    val f = fs(spark, liveDir)
-    val live = new Path(liveDir)
-    val old = new Path(liveDir + ".old")
-    f.delete(old, true)
-    f.rename(live, old)
-    f.rename(new Path(liveDir + ".compact"), live)
-    f.delete(old, true)
+    demote(spark, liveDir)
+    promote(spark, liveDir)
+    delete(spark, liveDir + ".old")
   }
+
+  /** First half of a swap: clear a stale `.old`, then demote live
+    * (absent live = the [[recoverSwap]] window; the promote finishes it). */
+  private def demote(spark: SparkSession, liveDir: String): Unit = {
+    val f = fs(spark, liveDir)
+    require(f.exists(new Path(liveDir + ".compact")),
+      s"swap $liveDir: no staged .compact copy — the live table stays in place")
+    f.delete(new Path(liveDir + ".old"), true)
+    if (f.exists(new Path(liveDir)))
+      renameOrFail(spark, liveDir, liveDir + ".old", "swap demote")
+  }
+
+  private def promote(spark: SparkSession, liveDir: String): Unit =
+    renameOrFail(spark, liveDir + ".compact", liveDir, "swap promote")
 
   /** Copy the flat files under `fromDir` whose names are neither in
     * `knownNames` nor already present under `toDir` — the RESCUE half
@@ -263,16 +245,12 @@ object IndexFs {
     */
   def swapCompactRescue(spark: SparkSession, liveDir: String,
       carrySubdir: String, appliedNames: Set[String]): Unit = {
-    val f = fs(spark, liveDir)
-    val live = new Path(liveDir)
-    val old = new Path(liveDir + ".old")
     copyNewFiles(spark, s"$liveDir.old/$carrySubdir",
       s"$liveDir/$carrySubdir", Set.empty)
-    f.delete(old, true)
-    f.rename(live, old)
-    f.rename(new Path(liveDir + ".compact"), live)
+    demote(spark, liveDir)
+    promote(spark, liveDir)
     copyNewFiles(spark, s"$liveDir.old/$carrySubdir", s"$liveDir/$carrySubdir",
       appliedNames)
-    f.delete(old, true)
+    delete(spark, liveDir + ".old")
   }
 }

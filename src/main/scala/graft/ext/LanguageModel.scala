@@ -305,15 +305,17 @@ object LanguageModel {
   // on purpose.
   // ---------------------------------------------------------------------
 
+  /** The stored LM's [[StoreLifecycle]]: one `bigrams` table, no
+    * tombstone table (a takedown appends negated counts), nothing
+    * frozen. Every mutation releases the memoized [[storedCounts]]. */
+  private val Lm = StoreLifecycle(Seq("bigrams"))
+
   /** Build the stored model: the corpus's bigram counts as parquet
     * under `indexDir/bigrams`, stamped batch_id='build'. */
-  def writeLmIndex(docs: DataFrame, indexDir: String): Unit = {
-    counts(inScope(docs)).withColumn("batch_id", lit("build"))
-      .write.mode("overwrite").parquet(s"$indexDir/bigrams")
-    // a memoized storedCounts over a PREVIOUS build at this path would
-    // silently serve the old model — invalidate on every mutation
-    graft.tools.InternalCaches.releaseByPath(docs.sparkSession, indexDir)
-  }
+  def writeLmIndex(docs: DataFrame, indexDir: String): Unit =
+    Lm.build(docs.sparkSession, indexDir)(
+      counts(inScope(docs)).withColumn("batch_id", lit("build"))
+        .write.mode("overwrite").parquet(s"$indexDir/bigrams"))
 
   /** Append one corpus increment's counts (ONE file per append — the
     * payload is vocabulary-of-the-batch-sized; upstream compute stays
@@ -325,15 +327,10 @@ object LanguageModel {
   def appendLmIndex(batch: DataFrame, indexDir: String, batchId: String,
       maxFiles: Int = 64): Unit = {
     val spark = batch.sparkSession
-    // heal a crashed compaction swap BEFORE appending (an append into a
-    // missing live dir would mint a batch-only model and orphan .compact)
-    IndexFs.recoverSwap(spark, s"$indexDir/bigrams")
-    bigramStream(inScope(batch)).groupBy("lang", "w1", "w2")
-      .agg(count(lit(1)).as("c12")).withColumn("batch_id", lit(batchId))
-      .repartition(1).write.mode("append").parquet(s"$indexDir/bigrams")
-    // a memoized storedCounts cached before this append would silently
-    // serve stale counts after it — invalidate on every mutation
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    Lm.append(spark, indexDir)(
+      bigramStream(inScope(batch)).groupBy("lang", "w1", "w2")
+        .agg(count(lit(1)).as("c12")).withColumn("batch_id", lit(batchId))
+        .repartition(1).write.mode("append").parquet(s"$indexDir/bigrams"))
     if (maxFiles > 0 &&
         Dedup.countDataFiles(spark, s"$indexDir/bigrams") > maxFiles.toLong)
       compactLmIndex(spark, indexDir)
@@ -353,7 +350,7 @@ object LanguageModel {
     * trained on the remaining corpus (counts are additive over
     * documents; c1 and V derive from c12). Replay-safe like appends:
     * a redelivered delete under the same batch_id reproduces
-    * byte-identical rows that distinct() collapses; two deletes of the
+    * byte-identical rows that distinct() collapses; two takedowns of the
     * same docs under DIFFERENT ids are the caller declaring two
     * decrements — same contract as double-appends. Cost: one batch
     * scan + a batch-vocabulary aggregate + one file, independent of
@@ -363,13 +360,10 @@ object LanguageModel {
   def deleteFromLmIndex(docs: DataFrame, indexDir: String,
       batchId: String, maxFiles: Int = 64): Unit = {
     val spark = docs.sparkSession
-    IndexFs.recoverSwap(spark, s"$indexDir/bigrams")
-    bigramStream(inScope(docs)).groupBy("lang", "w1", "w2")
-      .agg((-count(lit(1))).as("c12")).withColumn("batch_id", lit(batchId))
-      .repartition(1).write.mode("append").parquet(s"$indexDir/bigrams")
-    // a memoized storedCounts cached before this delete would keep
-    // scoring against the taken-down counts — invalidate on mutation
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    Lm.append(spark, indexDir)(
+      bigramStream(inScope(docs)).groupBy("lang", "w1", "w2")
+        .agg((-count(lit(1))).as("c12")).withColumn("batch_id", lit(batchId))
+        .repartition(1).write.mode("append").parquet(s"$indexDir/bigrams"))
     // same inline-compact trigger as appendLmIndex: a stream of
     // takedown requests is a stream of one-file appends, and without
     // the trigger the file count (and every storedCounts scan) grows
@@ -381,33 +375,24 @@ object LanguageModel {
 
   /** Maintenance: distinct-rewrite (collapsing any replayed appends —
     * batch-stamped rows are deterministic, so a replay is a byte-
-    * identical duplicate) then tmp → old → live swap
-    * ([[graft.ext.IndexFs.swapCompact]]). Every step leaves a complete
-    * copy of the model on disk; the one step with no LIVE directory
-    * (between the two renames) is detected and completed by
-    * [[graft.ext.IndexFs.recoverSwap]], run first here and by every
-    * score/append entry — a crash at any point is healed by the next
-    * touch. Batch stamps are KEPT: compaction must stay
-    * idempotence-preserving — summing across batches here would make
-    * the next replayed append undetectable.
+    * identical duplicate) swapped in by [[StoreLifecycle.rewrite]] — a
+    * crash at any point is healed by the next touch. Batch stamps are
+    * KEPT: compaction must stay idempotence-preserving — summing across
+    * batches here would make the next replayed append undetectable.
     */
   def compactLmIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexFs.recoverSwap(spark, s"$indexDir/bigrams")
-    // local persist, not the memoized registry: the frame reads the
-    // very directory the swap replaces
-    // one writer: the model is vocabulary-sized, and the compacted
-    // file count must land UNDER any append trigger threshold or the
-    // trigger would re-fire on every append. (repartition(1), not
-    // coalesce — the distinct upstream stays parallel.)
-    val bg = spark.read.parquet(s"$indexDir/bigrams").distinct().persist()
-    bg.repartition(1).write.mode("overwrite")
-      .parquet(s"$indexDir/bigrams.compact")
-    bg.unpersist(blocking = false)
-    IndexFs.swapCompact(spark, s"$indexDir/bigrams")
-    // the swap replaced the files a memoized storedCounts reads
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
-  }
+      indexDir: String): Unit =
+    Lm.rewrite(spark, indexDir) { staged =>
+      // local persist, not the memoized registry: the frame reads the
+      // very directory the swap replaces
+      // one writer: the model is vocabulary-sized, and the compacted
+      // file count must land UNDER any append trigger threshold or the
+      // trigger would re-fire on every append. (repartition(1), not
+      // coalesce — the distinct upstream stays parallel.)
+      val bg = spark.read.parquet(s"$indexDir/bigrams").distinct().persist()
+      bg.repartition(1).write.mode("overwrite").parquet(staged("bigrams"))
+      bg.unpersist(blocking = false)
+    }
 
   /** The stored model, merged for scoring: replayed appends collapse
     * (distinct over batch-stamped rows), then increments sum per
@@ -421,9 +406,9 @@ object LanguageModel {
     * staleness hazard the old non-memoized form defended against is
     * closed at the MUTATION sites instead: every verb that changes the
     * stored table ([[writeLmIndex]], [[appendLmIndex]],
-    * [[deleteFromLmIndex]], [[compactLmIndex]]) invalidates the
-    * registry by path, so a model read after a mutation re-derives
-    * from the live files (the deleteFromNearDupIndex discipline). A
+    * [[deleteFromLmIndex]], [[compactLmIndex]]) commits through
+    * [[StoreLifecycle]], which releases the frames reading it, so a
+    * model read after a mutation re-derives from the live files. A
     * FIXED model (x121's target) is thus computed once per entry and
     * served from cache across every later batch — the round-18
     * verdict's "hoist per-batch stored-index reads" item.
@@ -431,7 +416,7 @@ object LanguageModel {
   private def storedCounts(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
     // a reader after a mid-swap compactor crash self-heals (one rename)
-    IndexFs.recoverSwap(spark, s"$indexDir/bigrams")
+    Lm.enter(spark, indexDir)
     graft.tools.InternalCaches.persist(
       spark.read.parquet(s"$indexDir/bigrams").distinct()
         .groupBy("lang", "w1", "w2").agg(sum("c12").as("c12"))

@@ -36,34 +36,38 @@ object Similarity {
   private def cos(va: Column, vb: Column): Column =
     graft.functions.CosineSim.cosine_sim(va, vb)
 
+  /** The semantic store's [[StoreLifecycle]]: one partitioned
+    * `vectors` table, vec_id tombstones, and the frozen centroids. */
+  private val Semantic = StoreLifecycle(Seq("vectors"), Some("vec_id"),
+    Seq("centroids"))
+
+  /** The IVF-PQ store's [[StoreLifecycle]]: one partitioned `codes`
+    * table, vec_id tombstones, and the frozen quantizers. */
+  private val IvfPq = StoreLifecycle(Seq("codes"), Some("vec_id"),
+    Seq("centroids", "codebook"))
+
   /** The stored `vectors` table with takedown tombstones applied — the
     * read every consumer of the semantic index routes through. Deleted
-    * vec_ids ([[deleteFromSemanticIndex]]) are suppressed by a
-    * broadcast anti-join against the tiny `deletes/` table; the
-    * physical rows are removed at the next [[compactSemanticIndex]] /
+    * vec_ids ([[deleteFromSemanticIndex]]) are suppressed by
+    * [[StoreLifecycle.live]]'s broadcast anti-join; the physical rows
+    * are removed at the next [[compactSemanticIndex]] /
     * [[rebuildSemanticIndex]] (merge-on-read: a takedown never pays an
     * index-sized rewrite). Duplicate-row semantics are untouched —
     * callers that need the replay-collapse still `dropDuplicates`.
     */
-  private def liveVectors(spark: SparkSession, indexDir: String): DataFrame = {
+  private def liveVectors(spark: SparkSession, indexDir: String): DataFrame =
     // schema-pinned (the gram grain's round-17 lesson, Dedup.gramTable):
     // a compaction after a FULL-corpus takedown legally leaves this
     // partitionBy table with zero data files, and schema inference over
     // that directory throws instead of reading zero rows — the writer
     // fixes the schema, so pin it and keep every reader total
-    val v = spark.read
+    Semantic.live(spark, indexDir, spark.read
       .schema("vec_id LONG, v ARRAY<DOUBLE>, centroid_id LONG")
-      .parquet(s"$indexDir/vectors")
-    val del = s"$indexDir/deletes"
-    if (IndexFs.exists(spark, del))
-      v.join(broadcast(spark.read.parquet(del).distinct()),
-        Seq("vec_id"), "left_anti")
-    else v
-  }
+      .parquet(s"$indexDir/vectors"))
 
   /** Takedown at the vector grain — the right-to-be-forgotten verb for
     * the stored semantic index. Writes the vec_ids as TOMBSTONES
-    * (`deletes/`, one tiny file per request): every reader
+    * ([[StoreLifecycle.tombstone]], one tiny file per request): every reader
     * (screen, occupancy audit, mining, rebuild, compaction) anti-joins
     * them out, so the delete is effective at the next read for
     * O(|request|) I/O — never an index-sized rewrite on the takedown
@@ -80,16 +84,8 @@ object Similarity {
     * rows is exactly what keeps the takedown correct). Re-admit with
     * compact-then-append; spec-pinned in TakedownSpec.
     */
-  def deleteFromSemanticIndex(vecIds: DataFrame, indexDir: String): Unit = {
-    val spark = vecIds.sparkSession
-    IndexFs.recoverSwap(spark, indexDir)
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
-    vecIds.select(col("vec_id")).filter(col("vec_id").isNotNull).distinct()
-      .repartition(1).write.mode("append").parquet(s"$indexDir/deletes")
-    // a screen memoized before the takedown would keep serving the
-    // deleted rows — the same staleness class as the rebuild
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
-  }
+  def deleteFromSemanticIndex(vecIds: DataFrame, indexDir: String): Unit =
+    Semantic.tombstone(vecIds.sparkSession, indexDir, vecIds)
 
   /** Brute-force cosine top-k: query vectors are those with
     * vec_id % queryModulus == 0; for each, the k nearest others by
@@ -202,8 +198,7 @@ object Similarity {
       dupCos: Double = 0.9, nprobe: Int = 2): DataFrame = {
     val spark = anchors.sparkSession
     // a reader after a mid-swap compactor/rebuild crash self-heals
-    IndexFs.recoverSwap(spark, indexDir)
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    Semantic.enter(spark, indexDir)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val a = vecs(anchors).select(col("vec_id").as("query_id"), col("v").as("qv"))
     import graft.plans.TopKPerGroup
@@ -446,8 +441,7 @@ object Similarity {
     */
   def semanticChainOrderStored(spark: SparkSession, indexDir: String,
       chainCellCap: Int = DefaultChainCellCap): DataFrame = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    Semantic.enter(spark, indexDir)
     val assigned = graft.tools.InternalCaches.persist(
       liveVectors(spark, indexDir).dropDuplicates("vec_id")
         .select(col("vec_id"), col("v"), col("centroid_id")))
@@ -468,8 +462,7 @@ object Similarity {
       maxNeighbors: Int = 8,
       chainCellCap: Int = DefaultKnnChainCellCap): DataFrame = {
     require(maxNeighbors >= 1, s"maxNeighbors must be >= 1, got $maxNeighbors")
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    Semantic.enter(spark, indexDir)
     val assigned = graft.tools.InternalCaches.persist(
       liveVectors(spark, indexDir).dropDuplicates("vec_id")
         .select(col("vec_id"), col("v"), col("centroid_id")))
@@ -831,7 +824,7 @@ object Similarity {
     // consumes `cents` as its own broadcast aggregate), so they overlap
     // from a driver pool (guide §2.6) — the tiny centroid write and the
     // eligibility count back-fill the partitioned vectors write's tail
-    graft.tools.DriverPool.awaitAll(Seq(
+    Semantic.build(corpus.sparkSession, indexDir)(graft.tools.DriverPool.awaitAll(Seq(
       () => assignToCentroids(c, cents)
         .select(col("vec_id"), col("v"), col("centroid_id"))
         .transform(IndexFs.keyPartitioned(_, col("centroid_id"), maxCentroids.toLong))
@@ -840,7 +833,7 @@ object Similarity {
       () => cents.write.mode("overwrite").parquet(s"$indexDir/centroids"),
       () => writeQuantizerStamp(corpus.sparkSession, indexDir, centroidModulus,
         maxCentroids,
-        c.filter(col("vec_id") % centroidModulus === 0).count())))
+        c.filter(col("vec_id") % centroidModulus === 0).count()))))
     invalidateCentroidCount(corpus.sparkSession, indexDir)
   }
 
@@ -883,7 +876,7 @@ object Similarity {
     * window undercounts, as does a concurrent-append stamp race (the
     * read-modify-write is single-writer by contract — a lost increment
     * means the alarm fires LATE, and only the scan audit catches it);
-    * takedowns never decrement it (conservative — after heavy deletes
+    * takedowns never decrement it (conservative — after heavy takedowns
     * THAT direction fires early). The occupancy scan is the audit of
     * record, and every rebuild recomputes the total exactly over the
     * live corpus.
@@ -906,13 +899,10 @@ object Similarity {
     * a screen that probed new-geometry cell ids against an
     * old-geometry `partitionBy` layout (or vice versa) would read the
     * wrong cells, a correctness break, not a pruning loss. Swapping
-    * `indexDir` as a unit makes the only no-live window the single
-    * [[IndexFs.recoverSwap]] window every lifecycle entry already
-    * heals. The `_batch_commits` markers move into the new directory
-    * BEFORE the swap so post-rebuild redeliveries still skip; a crash
-    * between the marker move and the swap degrades that one batch to
-    * at-least-once, which [[compactSemanticIndex]]'s vec_id
-    * distinct-rewrite repairs (the documented crash-window contract).
+    * `indexDir` as a unit ([[StoreLifecycle.rebuild]]) makes the only
+    * no-live window the one every lifecycle entry already heals, and
+    * the commit markers move with the index so post-rebuild
+    * redeliveries still skip.
     *
     * Cost: one corpus scan for the retrain filter + the corpus-sized
     * assignment — the same bill as the original build, paid only when
@@ -921,52 +911,30 @@ object Similarity {
     */
   def rebuildSemanticIndex(spark: SparkSession, indexDir: String,
       centroidModulus: Int = 100, maxCentroids: Int = 1024): Unit = {
-    IndexFs.recoverSwap(spark, indexDir)
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
-    // a PRIOR rebuild may have crashed after moving the live markers
-    // into `.compact` — merge them back NOW (restoring the committed
-    // set and clearing the stale destination): left in place, they
-    // would make the forward move below silently fail (Hadoop rename
-    // returns false when the destination exists) and the swap would
-    // promote the STALE marker set over any markers appends have since
-    // re-created — those batches would redeliver as double-appends.
-    IndexFs.mergeMarkers(spark, s"$indexDir.compact/_batch_commits",
-      s"$indexDir/_batch_commits")
-    // local persist, not the memoized registry: the frame reads the
-    // very directory the swap replaces. Tombstoned vec_ids are OUT of
-    // the live set — the retrain must not learn geometry from taken-
-    // down vectors, and the rebuilt index (which replaces the whole
-    // directory, deletes/ included) removes them physically.
-    val v = liveVectors(spark, indexDir)
-      .dropDuplicates("vec_id").select(col("vec_id"), col("v")).persist()
-    val cents = ivfCentroids(v, centroidModulus, maxCentroids)
-    // both writes complete BEFORE any mutation of the live directory
-    assignToCentroids(v, cents)
-      .select(col("vec_id"), col("v"), col("centroid_id"))
-      .transform(IndexFs.keyPartitioned(_, col("centroid_id"), maxCentroids.toLong))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir.compact/vectors")
-    cents.write.mode("overwrite").parquet(s"$indexDir.compact/centroids")
-    // the rebuild recomputes the eligibility total EXACTLY over the
-    // live retrained corpus — the append-maintained running count
-    // (advisory, see [[semanticIngestCapBind]]) resets here
-    writeQuantizerStamp(spark, s"$indexDir.compact", centroidModulus,
-      maxCentroids,
-      v.filter(col("vec_id") % centroidModulus === 0).count())
-    v.unpersist(blocking = false)
-    // per-file move with asserted renames (the merge also tolerates a
-    // marker racing in on both sides); the entry-time merge above
-    // guaranteed the destination is clear of stale copies
-    IndexFs.mergeMarkers(spark, s"$indexDir/_batch_commits",
-      s"$indexDir.compact/_batch_commits")
-    IndexFs.swapCompact(spark, indexDir)
+    Semantic.rebuild(spark, indexDir) { staged =>
+      // local persist, not the memoized registry: the frame reads the
+      // very directory the swap replaces. Tombstoned vec_ids are OUT of
+      // the live set — the retrain must not learn geometry from taken-
+      // down vectors, and the rebuilt index (which replaces the whole
+      // directory, tombstones included) removes them physically.
+      val v = liveVectors(spark, indexDir)
+        .dropDuplicates("vec_id").select(col("vec_id"), col("v")).persist()
+      val cents = ivfCentroids(v, centroidModulus, maxCentroids)
+      assignToCentroids(v, cents)
+        .select(col("vec_id"), col("v"), col("centroid_id"))
+        .transform(IndexFs.keyPartitioned(_, col("centroid_id"), maxCentroids.toLong))
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(s"$staged/vectors")
+      cents.write.mode("overwrite").parquet(s"$staged/centroids")
+      // the rebuild recomputes the eligibility total EXACTLY over the
+      // live retrained corpus — the append-maintained running count
+      // (advisory, see [[semanticIngestCapBind]]) resets here
+      writeQuantizerStamp(spark, staged, centroidModulus, maxCentroids,
+        v.filter(col("vec_id") % centroidModulus === 0).count())
+      v.unpersist(blocking = false)
+    }
+    // the rebuild replaced the frozen centroids the trigger count reads
     invalidateCentroidCount(spark, indexDir)
-    // the rebuild replaced the FROZEN artifacts a screen is allowed to
-    // memoize against (the bench-assignment reads the centroid table):
-    // drop every internal cache whose plan reads this index, or the
-    // next screen would assign under the old geometry while probing
-    // the new layout — silently wrong, not just slow
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
   }
 
   /** Occupancy audit of the STORED semantic index — x113's balance
@@ -1006,8 +974,7 @@ object Similarity {
       cellCap: Int = DefaultCellCap,
       centroidModulus: Int = 100,
       maxCentroids: Int = 1024): DataFrame = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    Semantic.enter(spark, indexDir)
     val (mod, cap) = readQuantizerStamp(spark, indexDir)
       .getOrElse((centroidModulus.toLong, maxCentroids.toLong))
     liveVectors(spark, indexDir)
@@ -1108,8 +1075,7 @@ object Similarity {
       minCos: Double = 0.4): DataFrame = {
     val spark = bench.sparkSession
     // a reader after a mid-swap compactor crash self-heals (one rename)
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    Semantic.enter(spark, indexDir)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val b = vecs(bench)
     val ba = graft.tools.InternalCaches.persist(assignToCentroids(b, cents))
@@ -1161,54 +1127,53 @@ object Similarity {
   def appendSemanticIndex(batch: DataFrame, indexDir: String,
       maxFilesPerCell: Int = 64): Unit = {
     val spark = batch.sparkSession
-    // heal a crashed compaction swap BEFORE appending (an append into a
-    // missing live dir would fork the index away from the .compact copy)
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    // persisted because the eligibility probe below re-reads it: the
-    // stamp must count the frame ACTUALLY appended (post-assignment —
-    // rows the quantizer drops never land, so counting the raw batch
-    // would overcount), and re-deriving the assignment for one count
-    // would double the append's compute
-    val appended = assignToCentroids(vecs(batch), cents)
-      .select(col("vec_id"), col("v"), col("centroid_id")).persist()
-    appended
-      .repartition(1)
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$indexDir/vectors")
-    // ingest-time cap-bind check (round 17, the verdict's item 6):
-    // maintain the stamp's eligibility RUNNING TOTAL — one batch-sized
-    // aggregate per append — so the bind is detected at the moment
-    // eligibility grows, not when a monitoring job next scans the
-    // layout. Data before stamp (a crash between undercounts — the
-    // advisory direction; [[semanticIngestCapBind]] documents the
-    // contract, the occupancy scan stays the audit of record). The
-    // update is a non-atomic read-modify-write of the stamp:
-    // CONCURRENT appends can lose an increment (undercount — the alarm
-    // would fire LATE), which is why the stamp shares the append
-    // path's single-writer contract rather than merely its
-    // exactly-once one; the next rebuild recomputes the total exactly.
-    // Silent no-op on pre-upgrade stamps without the field.
-    locally {
-      val kv = readStampMap(spark, s"$indexDir/_quantizer")
-      for (mod <- kv.get("modulus"); cap <- kv.get("cap");
-           old <- kv.get("eligible")) {
-        // distinct ids: a duplicate batch row lands twice physically
-        // but collapses at the next compaction's vec_id rewrite, so
-        // counting occurrences would inflate eligibility forever
-        val total = old + appended.filter(col("vec_id") % mod === 0)
-          .select("vec_id").distinct().count()
-        writeQuantizerStamp(spark, indexDir, mod, cap, total)
-        if (total > cap)
-          System.err.println(s"[graft] appendSemanticIndex($indexDir): " +
-            s"eligible seeds $total exceed the stamped centroid cap $cap " +
-            "— the next retrain's rank cut binds (recall loss nprobe " +
-            "cannot reclaim). Remedy: retrainSemanticIfCapBound / " +
-            "rebuildSemanticIndex at a wider cap.")
+    val cents = Semantic.append(spark, indexDir) {
+      val cents = spark.read.parquet(s"$indexDir/centroids")
+      // persisted because the eligibility probe below re-reads it: the
+      // stamp must count the frame ACTUALLY appended (post-assignment —
+      // rows the quantizer drops never land, so counting the raw batch
+      // would overcount), and re-deriving the assignment for one count
+      // would double the append's compute
+      val appended = assignToCentroids(vecs(batch), cents)
+        .select(col("vec_id"), col("v"), col("centroid_id")).persist()
+      appended
+        .repartition(1)
+        .write.mode("append").partitionBy("centroid_id")
+        .parquet(s"$indexDir/vectors")
+      // ingest-time cap-bind check (round 17, the verdict's item 6):
+      // maintain the stamp's eligibility RUNNING TOTAL — one batch-sized
+      // aggregate per append — so the bind is detected at the moment
+      // eligibility grows, not when a monitoring job next scans the
+      // layout. Data before stamp (a crash between undercounts — the
+      // advisory direction; [[semanticIngestCapBind]] documents the
+      // contract, the occupancy scan stays the audit of record). The
+      // update is a non-atomic read-modify-write of the stamp:
+      // CONCURRENT appends can lose an increment (undercount — the alarm
+      // would fire LATE), which is why the stamp shares the append
+      // path's single-writer contract rather than merely its
+      // exactly-once one; the next rebuild recomputes the total exactly.
+      // Silent no-op on pre-upgrade stamps without the field.
+      locally {
+        val kv = readStampMap(spark, s"$indexDir/_quantizer")
+        for (mod <- kv.get("modulus"); cap <- kv.get("cap");
+             old <- kv.get("eligible")) {
+          // distinct ids: a duplicate batch row lands twice physically
+          // but collapses at the next compaction's vec_id rewrite, so
+          // counting occurrences would inflate eligibility forever
+          val total = old + appended.filter(col("vec_id") % mod === 0)
+            .select("vec_id").distinct().count()
+          writeQuantizerStamp(spark, indexDir, mod, cap, total)
+          if (total > cap)
+            System.err.println(s"[graft] appendSemanticIndex($indexDir): " +
+              s"eligible seeds $total exceed the stamped centroid cap $cap " +
+              "— the next retrain's rank cut binds (recall loss nprobe " +
+              "cannot reclaim). Remedy: retrainSemanticIfCapBound / " +
+              "rebuildSemanticIndex at a wider cap.")
+        }
       }
+      appended.unpersist(blocking = false)
+      cents
     }
-    appended.unpersist(blocking = false)
     if (maxFilesPerCell > 0 &&
         graft.ext.Dedup.countDataFiles(spark, s"$indexDir/vectors") >
           maxFilesPerCell.toLong * cachedCentroidCount(spark, indexDir, cents))
@@ -1234,60 +1199,36 @@ object Similarity {
     * (the x115 streaming gate): duplicated vector rows INFLATE the
     * screen's n_matches (the x104/x114 rationale at the vector grain),
     * so each append commits a per-batch marker and a redelivered batch
-    * skips. Marker AFTER data (marker-first would lose the batch); the
-    * crash window's double-append is repaired by
-    * [[compactSemanticIndex]]'s distinct rewrite. Marker I/O goes
-    * through [[graft.ext.IndexFs]] (the Hadoop API), so the
-    * exactly-once contract holds on hdfs/s3a index dirs, not just
-    * local disk. Returns whether the append ran.
+    * skips ([[StoreLifecycle.appendOnce]]); the crash window's
+    * double-append is repaired by [[compactSemanticIndex]]'s distinct
+    * rewrite. Returns whether the append ran.
     */
   def appendSemanticIndexOnce(batch: DataFrame, indexDir: String,
-      batchId: Long, maxFilesPerCell: Int = 64): Boolean = {
-    val spark = batch.sparkSession
-    // heal a crashed whole-index rebuild swap BEFORE the marker probe:
-    // the markers live inside the swapped directory
-    IndexFs.recoverSwap(spark, indexDir)
-    val marker = s"$indexDir/_batch_commits/b$batchId"
-    if (IndexFs.exists(spark, marker)) false
-    else {
-      appendSemanticIndex(batch, indexDir, maxFilesPerCell)
-      IndexFs.touch(spark, marker)
-      true
-    }
-  }
+      batchId: Long, maxFilesPerCell: Int = 64): Boolean =
+    Semantic.appendOnce(batch.sparkSession, indexDir, batchId)(
+      appendSemanticIndex(batch, indexDir, maxFilesPerCell))
 
   /** Offline maintenance for the semantic index: deduplicate `vectors`
     * by vec_id (assignment under the frozen centroids is deterministic,
     * so replayed rows are byte-identical and any one survives), rewrite
-    * the partitioned layout, and swap tmp → old → live so a crash at
-    * any point leaves a readable index (the compactNearDupIndex
-    * discipline: every step leaves a complete copy on disk, and the
-    * one no-live-dir step between the renames is detected and
-    * completed by [[graft.ext.IndexFs.recoverSwap]], run first here
-    * and by every screen/append entry). Centroids are left as built —
+    * the partitioned layout with takedown tombstones applied durably,
+    * and swap it in ([[StoreLifecycle.rewrite]] — a crash at any point
+    * leaves a readable index). Centroids are left as built —
     * refreshing them is a REBUILD ([[rebuildSemanticIndex]]), not a
     * compaction.
     */
-  def compactSemanticIndex(spark: SparkSession, indexDir: String): Unit = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
-    // local persist, not the memoized registry: the frame reads the
-    // very directory the swap replaces. Takedown tombstones apply here
-    // DURABLY (liveVectors anti-joins them out of the rewrite) and are
-    // cleared after the swap — clearing strictly after the swapped-in
-    // table has the rows physically gone means a crash between the two
-    // leaves the tombstones anti-joining absent ids (a no-op), never a
-    // resurrected vector. Single-writer per the lifecycle convention.
-    val v = liveVectors(spark, indexDir)
-      .dropDuplicates("vec_id").persist()
-    v.transform(IndexFs.keyPartitioned(_, col("centroid_id"),
-      readQuantizerStamp(spark, indexDir).map(_._2).getOrElse(1024L)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir/vectors.compact")
-    v.unpersist(blocking = false)
-    IndexFs.swapCompact(spark, s"$indexDir/vectors")
-    IndexFs.delete(spark, s"$indexDir/deletes")
-  }
+  def compactSemanticIndex(spark: SparkSession, indexDir: String): Unit =
+    Semantic.rewrite(spark, indexDir) { staged =>
+      // local persist, not the memoized registry: the frame reads the
+      // very directory the swap replaces
+      val v = liveVectors(spark, indexDir)
+        .dropDuplicates("vec_id").persist()
+      v.transform(IndexFs.keyPartitioned(_, col("centroid_id"),
+        readQuantizerStamp(spark, indexDir).map(_._2).getOrElse(1024L)))
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(staged("vectors"))
+      v.unpersist(blocking = false)
+    }
 
   /** [[semDedup]] with a TWO-LEVEL quantizer — the assignment scale
     * path. The flat quantizer scores every vector against every
@@ -2167,8 +2108,8 @@ object Similarity {
     // write's tail instead of each paying full job latency after it.
     // Crash exposure is unchanged — a torn build directory was already
     // possible at any point of the sequential form; rebuild callers
-    // write into a tmp dir and swap ([[rebuildIvfPqIndex]]).
-    graft.tools.DriverPool.awaitAll(Seq(
+    // write into a tmp dir and swap ([[ivfPqRebuildIndex]]).
+    IvfPq.build(emb.sparkSession, indexDir)(graft.tools.DriverPool.awaitAll(Seq(
       () => codes
         .transform(IndexFs.keyPartitioned(_, col("centroid_id"), maxCentroids.toLong))
         .write.mode("overwrite").partitionBy("centroid_id")
@@ -2192,7 +2133,7 @@ object Similarity {
             s"code_modulus=$codeModulus\ncode_cap=$maxCodes\n" +
             s"eligible=${eligRow.getLong(0)}\n" +
             s"code_eligible=${eligRow.getLong(1)}")
-      }))
+      })))
   }
 
   /** x61 — INCREMENTAL append to a persisted IVF-PQ index: the ingest
@@ -2227,40 +2168,38 @@ object Similarity {
     * audit of record and every rebuild recomputes the totals exactly.
     */
   def ivfPqAppendIndex(newEmb: DataFrame, indexDir: String): Unit = {
-    IndexFs.recoverSwap(newEmb.sparkSession, indexDir) // whole-index REBUILD swap
     val spark = newEmb.sparkSession
-    // heal a crashed compaction swap BEFORE appending (an append into a
-    // missing live dir would fork the index away from the .compact copy)
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    val cws = spark.read.parquet(s"$indexDir/codebook")
-    encodeAgainst(vecs(newEmb), cents, cws, storedM(cws))
-      .transform(IndexFs.keyPartitioned(_, col("centroid_id"),
-        cachedCentroidCount(spark, indexDir, cents)))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$indexDir/codes")
-    // ingest-time cap-bind check at the compressed grain — BOTH running
-    // totals maintained in one batch-sized aggregate; the contract is
-    // [[semanticIngestCapBind]]'s (advisory, data-before-stamp,
-    // rebuild recomputes exactly); silent no-op on pre-upgrade stamps
-    locally {
-      val kv = readStampMap(spark, s"$indexDir/_quantizer")
-      for (mod <- kv.get("modulus"); cap <- kv.get("cap");
-           cmod <- kv.get("code_modulus"); ccap <- kv.get("code_cap");
-           old <- kv.get("eligible"); cold <- kv.get("code_eligible")) {
-        val r = vecs(newEmb).agg(
-          coalesce(sum(when(col("vec_id") % mod === 0, 1L)), lit(0L)),
-          coalesce(sum(when(col("vec_id") % cmod === 0, 1L)), lit(0L)))
-          .head()
-        val (total, ctotal) = (old + r.getLong(0), cold + r.getLong(1))
-        IndexFs.writeSmall(spark, s"$indexDir/_quantizer",
-          s"modulus=$mod\ncap=$cap\ncode_modulus=$cmod\ncode_cap=$ccap\n" +
-            s"eligible=$total\ncode_eligible=$ctotal")
-        if (total > cap || ctotal > ccap)
-          System.err.println(s"[graft] ivfPqAppendIndex($indexDir): " +
-            s"eligibility crossed a stamped rank cap (coarse $total/$cap, " +
-            s"code $ctotal/$ccap) — the next retrain's cut binds. " +
-            "Remedy: ivfPqRetrainIfCapBound / ivfPqRebuildIndex wider.")
+    IvfPq.append(spark, indexDir) {
+      val cents = spark.read.parquet(s"$indexDir/centroids")
+      val cws = spark.read.parquet(s"$indexDir/codebook")
+      encodeAgainst(vecs(newEmb), cents, cws, storedM(cws))
+        .transform(IndexFs.keyPartitioned(_, col("centroid_id"),
+          cachedCentroidCount(spark, indexDir, cents)))
+        .write.mode("append").partitionBy("centroid_id")
+        .parquet(s"$indexDir/codes")
+      // ingest-time cap-bind check at the compressed grain — BOTH running
+      // totals maintained in one batch-sized aggregate; the contract is
+      // [[semanticIngestCapBind]]'s (advisory, data-before-stamp,
+      // rebuild recomputes exactly); silent no-op on pre-upgrade stamps
+      locally {
+        val kv = readStampMap(spark, s"$indexDir/_quantizer")
+        for (mod <- kv.get("modulus"); cap <- kv.get("cap");
+             cmod <- kv.get("code_modulus"); ccap <- kv.get("code_cap");
+             old <- kv.get("eligible"); cold <- kv.get("code_eligible")) {
+          val r = vecs(newEmb).agg(
+            coalesce(sum(when(col("vec_id") % mod === 0, 1L)), lit(0L)),
+            coalesce(sum(when(col("vec_id") % cmod === 0, 1L)), lit(0L)))
+            .head()
+          val (total, ctotal) = (old + r.getLong(0), cold + r.getLong(1))
+          IndexFs.writeSmall(spark, s"$indexDir/_quantizer",
+            s"modulus=$mod\ncap=$cap\ncode_modulus=$cmod\ncode_cap=$ccap\n" +
+              s"eligible=$total\ncode_eligible=$ctotal")
+          if (total > cap || ctotal > ccap)
+            System.err.println(s"[graft] ivfPqAppendIndex($indexDir): " +
+              s"eligibility crossed a stamped rank cap (coarse $total/$cap, " +
+              s"code $ctotal/$ccap) — the next retrain's cut binds. " +
+              "Remedy: ivfPqRetrainIfCapBound / ivfPqRebuildIndex wider.")
+        }
       }
     }
   }
@@ -2269,7 +2208,7 @@ object Similarity {
     * `Some((coarse_bound, code_bound))` from the stamp's running
     * eligibility totals; `None` on pre-upgrade stamps. Same advisory
     * contract (exactly-once appends exact; crash window undercounts;
-    * deletes never decrement; [[ivfPqOccupancy]] is the audit of
+    * takedowns never decrement; [[ivfPqOccupancy]] is the audit of
     * record; rebuilds recompute exactly).
     */
   def ivfPqIngestCapBind(spark: SparkSession,
@@ -2288,22 +2227,15 @@ object Similarity {
     (cws.agg(max(col("subspace"))).head().getLong(0) + 1).toInt
 
   /** The stored `codes` table with takedown tombstones applied — the
-    * [[liveVectors]] discipline for the IVF-PQ index. A crashed
-    * [[ivfPqCompactIndex]] swap self-heals first.
+    * [[liveVectors]] discipline for the IVF-PQ index. Callers have
+    * entered the store (healed) first.
     */
-  private def liveCodes(spark: SparkSession, indexDir: String): DataFrame = {
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
+  private def liveCodes(spark: SparkSession, indexDir: String): DataFrame =
     // schema-pinned for the same full-takedown-then-compact state as
     // [[liveVectors]] — an emptied codes table must read as zero rows
-    val c = spark.read
+    IvfPq.live(spark, indexDir, spark.read
       .schema("vec_id LONG, subspace LONG, code_id LONG, centroid_id LONG")
-      .parquet(s"$indexDir/codes")
-    val del = s"$indexDir/deletes"
-    if (IndexFs.exists(spark, del))
-      c.join(broadcast(spark.read.parquet(del).distinct()),
-        Seq("vec_id"), "left_anti")
-    else c
-  }
+      .parquet(s"$indexDir/codes"))
 
   /** x138 — retrain-and-migrate for the persisted IVF-PQ index: the
     * x116 discipline at the compressed grain, and the SAFE form of the
@@ -2312,19 +2244,18 @@ object Similarity {
     * overwrites `codes`, then `centroids`, then `codebook`, and a
     * crash between the writes leaves new-geometry codes beside
     * old-geometry quantizers: WRONG search results, not just a torn
-    * directory. This verb builds into `indexDir.compact` and swaps the
-    * whole directory tmp → old → live, so vectors/centroids/codebook/
-    * stamp change together and the only no-live window is the single
-    * [[IndexFs.recoverSwap]] window every IVF-PQ entry point now
-    * heals.
+    * directory. This verb builds beside the live index and swaps the
+    * whole directory ([[StoreLifecycle.rebuild]]), so codes/centroids/
+    * codebook/stamp change together and the only no-live window is the
+    * one every IVF-PQ entry point heals.
     *
     * The corpus is handed back by the caller (codes are LOSSY — the
     * original vectors cannot be reconstructed from the index; the
     * x117 hand-back contract, same as the near-dup rebuild).
     * Tombstoned vec_ids are filtered OUT of the handed-back corpus —
     * the retrain must not learn geometry from taken-down vectors, and
-    * the swapped-in directory starts clean (`deletes/` stays behind in
-    * `.old`), so takedowns stay durable across a careless hand-back.
+    * the swapped-in directory starts without tombstones, so takedowns
+    * stay durable across a careless hand-back.
     * Memoized searches over the old geometry are released (the x116
     * stale-geometry lesson). Cost = the original build's.
     */
@@ -2338,20 +2269,12 @@ object Similarity {
       maxCodes: Int = 256,
       trainIters: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    IndexFs.recoverSwap(spark, indexDir)
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
-    val tmp = s"$indexDir.compact"
-    IndexFs.delete(spark, tmp)
-    val del = s"$indexDir/deletes"
-    val live =
-      if (IndexFs.exists(spark, del))
-        corpus.join(broadcast(spark.read.parquet(del).distinct()),
-          Seq("vec_id"), "left_anti")
-      else corpus
-    ivfPqWriteIndex(live, tmp, centroidModulus, maxCentroids, m,
-      codeModulus, maxCodes, trainIters)
-    IndexFs.swapCompact(spark, indexDir)
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    IvfPq.rebuild(spark, indexDir)(staged =>
+      ivfPqWriteIndex(IvfPq.live(spark, indexDir, corpus), staged,
+        centroidModulus, maxCentroids, m, codeModulus, maxCodes, trainIters))
+    // the append path sizes its write from this count; the retrain
+    // replaced the centroids it counted
+    invalidateCentroidCount(spark, indexDir)
   }
 
   /** x135 — occupancy + cap-bind audit of the STORED IVF-PQ index:
@@ -2379,7 +2302,7 @@ object Similarity {
       cellCap: Int = DefaultCellCap,
       centroidModulus: Int = 100, maxCentroids: Int = 1024,
       codeModulus: Int = 5, maxCodes: Int = 256): DataFrame = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
+    IvfPq.enter(spark, indexDir)
     val kv = readStampMap(spark, s"$indexDir/_quantizer")
     val mod = kv.getOrElse("modulus", centroidModulus.toLong)
     val cap = kv.getOrElse("cap", maxCentroids.toLong)
@@ -2477,7 +2400,7 @@ object Similarity {
 
   /** Takedown for the persisted IVF-PQ index — the
     * [[deleteFromSemanticIndex]] verb at the compressed grain: vec_ids
-    * land as tombstones (`deletes/`, set-semantics replay-safe),
+    * land as tombstones ([[StoreLifecycle.tombstone]], replay-safe),
     * searches anti-join them out of the codes read (so a taken-down
     * vector can never reach a shortlist, and therefore never the exact
     * re-rank either), and [[ivfPqCompactIndex]] applies them durably.
@@ -2486,39 +2409,27 @@ object Similarity {
     * Tombstones win over re-appends until a compaction clears them
     * (re-admission = compact-then-append).
     */
-  def deleteFromIvfPqIndex(vecIds: DataFrame, indexDir: String): Unit = {
-    val spark = vecIds.sparkSession
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
-    vecIds.select(col("vec_id")).filter(col("vec_id").isNotNull).distinct()
-      .repartition(1).write.mode("append").parquet(s"$indexDir/deletes")
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
-  }
+  def deleteFromIvfPqIndex(vecIds: DataFrame, indexDir: String): Unit =
+    IvfPq.tombstone(vecIds.sparkSession, indexDir, vecIds)
 
   /** Offline maintenance for the codes table: apply takedown
     * tombstones durably and collapse the per-append file accumulation
     * ([[ivfPqAppendIndex]] adds files, never rewrites — this is where
     * they fold), preserving the `partitionBy(centroid_id)` layout the
-    * search side's partition pruning depends on. tmp → old → live swap
-    * with the usual recovery ([[IndexFs.recoverSwap]] at every search
-    * entry); tombstones clear strictly after the swap — a crash
-    * between leaves them anti-joining absent rows, never a
-    * resurrected vector.
+    * search side's partition pruning depends on
+    * ([[StoreLifecycle.rewrite]]: swap, then clear the tombstones).
     */
-  def ivfPqCompactIndex(spark: SparkSession, indexDir: String): Unit = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
-    // local persist, not the memoized registry: the frame reads the
-    // very directory the swap replaces
-    val c = liveCodes(spark, indexDir).persist()
-    c.transform(IndexFs.keyPartitioned(_, col("centroid_id"),
-      readStampMap(spark, s"$indexDir/_quantizer").getOrElse("cap", 1024L)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir/codes.compact")
-    c.unpersist(blocking = false)
-    IndexFs.swapCompact(spark, s"$indexDir/codes")
-    IndexFs.delete(spark, s"$indexDir/deletes")
-  }
+  def ivfPqCompactIndex(spark: SparkSession, indexDir: String): Unit =
+    IvfPq.rewrite(spark, indexDir) { staged =>
+      // local persist, not the memoized registry: the frame reads the
+      // very directory the swap replaces
+      val c = liveCodes(spark, indexDir).persist()
+      c.transform(IndexFs.keyPartitioned(_, col("centroid_id"),
+        readStampMap(spark, s"$indexDir/_quantizer").getOrElse("cap", 1024L)))
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(staged("codes"))
+      c.unpersist(blocking = false)
+    }
 
   /** x59 search half — query a PERSISTED IVF-PQ index: reads the three
     * tables [[ivfPqWriteIndex]] wrote and runs the search pipeline
@@ -2536,10 +2447,8 @@ object Similarity {
       k: Int = 5,
       nprobe: Int = 2): DataFrame = {
     val spark = emb.sparkSession
-    // heal a crashed whole-index REBUILD swap before the first read
-    // (the semantic family's double-heal; liveCodes heals the
-    // per-table compaction swap)
-    IndexFs.recoverSwap(spark, indexDir)
+    // a reader after a crashed rebuild or compaction swap self-heals
+    IvfPq.enter(spark, indexDir)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val cws = spark.read.parquet(s"$indexDir/codebook")
     val m = storedM(cws)

@@ -76,7 +76,7 @@ object DocStream {
     // (Dedup.autoBucketCount — the round-13 3.5× mis-sizing foot-gun,
     // closed by default). The bootstrap batch undersells a long append
     // horizon by ~nBatches; callers sizing for one pass an explicit
-    // count (or expectedItems on the build) as before.
+    // count as before.
     // Hadoop-API probe (not java.io.File): the bootstrap decision must
     // see the same filesystem the index writes to, or a remote indexDir
     // would re-bootstrap (and overwrite the index) on every batch

@@ -17,13 +17,16 @@ package graft.tools
   */
 object DriverPool {
 
+  /** Per-task bound on the await: a hung filesystem op must not pin a
+    * verb forever, and a timed-out task leaves the same crash-consistent
+    * state as any other failure. */
+  private val TimeoutSec = 3600L
+
   /** Run `tasks` concurrently on a ≤4-thread pool; block until ALL
     * complete (or the per-task bound expires), then rethrow the first
     * failure. Single-task and empty lists run inline — no pool.
     */
-  def awaitAll(tasks: Seq[() => Unit],
-      timeoutSec: Long = sys.env.getOrElse(
-        "SPARK_GRAFT_POOL_TIMEOUT_SEC", "3600").toLong): Unit = {
+  def awaitAll(tasks: Seq[() => Unit]): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(4, tasks.size))
@@ -32,7 +35,7 @@ object DriverPool {
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val fs = tasks.map(t => scala.concurrent.Future(t.apply()))
       val results = fs.map(f => scala.util.Try(scala.concurrent.Await
-        .result(f, scala.concurrent.duration.Duration(timeoutSec,
+        .result(f, scala.concurrent.duration.Duration(TimeoutSec,
           java.util.concurrent.TimeUnit.SECONDS))))
       results.collectFirst { case scala.util.Failure(e) => throw e }
     } finally pool.shutdown()

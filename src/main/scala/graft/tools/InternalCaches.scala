@@ -93,13 +93,12 @@ object InternalCaches {
 
   /** Unpersist and deregister every internal cache of this session
     * whose plan reads files under `pathPrefix` — the invalidation hook
-    * for index REBUILDS: the registry keys on the canonical plan, and
-    * a plan reading "parquet at path P" hashes the same before and
-    * after P's contents are replaced wholesale, so a memoized frame
-    * (e.g. the screen's bench-assignment against stored centroids)
-    * would silently serve the OLD geometry after a retrain-and-swap.
-    * Appends don't need this (the memoized frames read only the frozen
-    * artifacts); rebuilds replace the frozen artifacts themselves.
+    * for stored-index commits: the registry keys on the canonical plan,
+    * and a plan reading "parquet at path P" hashes the same before and
+    * after P's contents change, so a memoized frame (e.g. the screen's
+    * bench-assignment against stored centroids) would silently serve
+    * the OLD files after a commit. [[graft.ext.StoreLifecycle]] calls it
+    * for every table a commit writes or a takedown filters.
     * A frame whose input files cannot be enumerated is dropped too,
     * and so is one whose enumeration succeeded but came back EMPTY —
     * an empty list is what a plan whose file-reading subtree was
